@@ -468,11 +468,13 @@ def _cluster_lines(spans: list[tuple[float, float, float, str]]):
     return lines
 
 
-def _line_text(line: dict) -> str:
+def _line_text(line: list) -> str:
     """Join a line's spans in reading order — two-level bidi (round 6).
 
-    ``line["spans"]`` is x-ASCENDING by construction (_cluster_lines
-    sorts each baseline group by x before splitting runs). Ordering is
+    ``line`` is one ``[y, size, spans]`` entry of :func:`_cluster_lines`,
+    with ``spans`` a list of ``(x, text)`` pairs, x-ASCENDING by
+    construction (_cluster_lines sorts each baseline group by x before
+    splitting runs). Ordering is
     the UAX#9-shaped two-level rule:
 
     * line BASE direction = majority script of the whole line

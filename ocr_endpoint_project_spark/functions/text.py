@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+_HOISTED = "_hoisted"
+
 
 def hoist(df: DataFrame, keep: list[str] | tuple[str, ...], **exprs: Column) -> DataFrame:
     """Materialize computed columns as REAL attributes through a Generate
@@ -24,12 +26,19 @@ def hoist(df: DataFrame, keep: list[str] | tuple[str, ...], **exprs: Column) -> 
     the corpus shingle pass (round-8 OPTIMIZATION_r08.md). A Generate
     node is a collapse boundary, so after the explode the columns are
     attributes evaluated exactly once per row. The one-element explode
-    itself is O(rows) and null-safe (``array(e)`` is ``[NULL]`` when the
-    expression is null, so no rows are dropped).
+    itself is O(rows) and drops no rows: the packed ``struct`` is never
+    NULL (a null expression becomes a NULL field inside it), so the array
+    always holds exactly one element.
+
+    The struct travels under the intermediate name ``_hoisted``; a
+    ``keep`` or ``exprs`` name equal to it is rejected, since it would
+    make the unpacking ambiguous.
     """
+    if _HOISTED in keep or _HOISTED in exprs:
+        raise ValueError(f"hoist: column name {_HOISTED!r} is reserved")
     packed = F.explode(F.array(F.struct(*[e.alias(n) for n, e in exprs.items()])))
-    tmp = df.select(*keep, packed.alias("_hoisted"))
-    return tmp.select(*keep, *[F.col(f"_hoisted.{n}").alias(n) for n in exprs])
+    tmp = df.select(*keep, packed.alias(_HOISTED))
+    return tmp.select(*keep, *[F.col(f"{_HOISTED}.{n}").alias(n) for n in exprs])
 
 
 def norm_tokens(col: Column | str) -> Column:

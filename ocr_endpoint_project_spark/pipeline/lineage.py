@@ -3,8 +3,9 @@
 The reference's job state machine (``cv_api/main.py:223-301``: queued ->
 processing -> succeeded|failed, timings, lineage ids) becomes DATA: one
 lineage row per logical partition with doc/byte counts, an
-order-insensitive content checksum, and stage timestamps. Resume is a
-broadcast anti-join of the input against succeeded partition ids.
+order-insensitive content checksum, and stage timestamps. Resume
+collects the succeeded partition ids (at most ``P``) to the driver and
+filters them out of the input before the exchange.
 
 Exactly-once contract: extracted rows are written with dynamic partition
 overwrite keyed by ``partition_id`` (re-running a partition REPLACES its
@@ -18,13 +19,14 @@ the newest row per partition_id.
 
 from __future__ import annotations
 
+import hashlib
 import os
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .extract import DEFAULT_PARTITIONS, run_extraction
+from .extract import DEFAULT_PARTITIONS, run_extraction, task_slots
 
 STATUS_SUCCEEDED = "succeeded"
 
@@ -99,8 +101,9 @@ def latest_lineage(lineage: DataFrame) -> DataFrame:
     )
 
 
-def resume_filter(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
-    """Succeeded partition ids from a previous run, or None on first run.
+def _succeeded_lineage(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
+    """Newest lineage row per partition, succeeded only; None when the
+    lineage table does not exist yet (a fresh run).
 
     Only the missing-path case means "fresh run"; any other read failure
     (permissions, corrupt footer) re-raises — silently discarding resume
@@ -114,11 +117,16 @@ def resume_filter(spark: SparkSession, lineage_dir: str) -> DataFrame | None:
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
         raise
-    return (
-        latest_lineage(lin)
-        .filter(F.col("status") == STATUS_SUCCEEDED)
-        .select("partition_id")
-    )
+    return latest_lineage(lin).filter(F.col("status") == STATUS_SUCCEEDED)
+
+
+def resume_filter(spark: SparkSession, lineage_dir: str) -> set[int]:
+    """Succeeded partition ids from previous runs (empty on a first run),
+    collected to the driver: there are at most ``P`` of them."""
+    lin = _succeeded_lineage(spark, lineage_dir)
+    if lin is None:
+        return set()
+    return {int(r["partition_id"]) for r in lin.select("partition_id").collect()}
 
 
 def run_with_lineage(
@@ -151,25 +159,27 @@ def run_with_lineage(
         # the input bytes; a write-stage exchange keyed on P distinct
         # values is birthday-lumpy, which is acceptable for pure IO
         # tasks but must never sit in front of the extraction kernel.
-        extracted.repartition(num_partitions, F.col("partition_id"))
+        # No more tasks than slots: each costs a fixed launch overhead.
+        extracted.repartition(
+            min(num_partitions, task_slots(extracted)), F.col("partition_id")
+        )
         .write.mode("overwrite")
         .partitionBy("partition_id")
         .parquet(extracted_dir)
     )
     # commit point: lineage appended only after the data write returned
     done_rows = spark.read.parquet(extracted_dir)
-    if done is not None:
-        done_rows = done_rows.join(F.broadcast(done), "partition_id", "left_anti")
+    if done:
+        done_rows = done_rows.filter(~F.col("partition_id").isin(sorted(done)))
     lin = lineage_rows(
         done_rows, run_id, started_at=started_at, partitions_total=num_partitions
     )
     lin.write.mode("append").parquet(lineage_dir)
 
-    n_done = 0 if done is None else done.count()
     lin_now = spark.read.parquet(lineage_dir)
     return {
         "run_id": run_id,
-        "resumed_partitions_skipped": n_done,
+        "resumed_partitions_skipped": len(done),
         "partitions_total": latest_lineage(lin_now).count(),
         "extracted_dir": extracted_dir,
         "lineage_dir": lineage_dir,
@@ -196,8 +206,8 @@ def job_progress(
     Returns ``{"stage", "percent", "partitions_done", "partitions_total",
     "docs_done"}``.
     """
-    done = resume_filter(spark, lineage_dir)
-    if done is None:
+    lin = _succeeded_lineage(spark, lineage_dir)
+    if lin is None:
         return {
             "stage": "preparing",
             "percent": 0.0,
@@ -205,10 +215,8 @@ def job_progress(
             "partitions_total": num_partitions,
             "docs_done": 0,
         }
-    lin_all = spark.read.parquet(lineage_dir)
-    lin = latest_lineage(lin_all).filter(F.col("status") == STATUS_SUCCEEDED)
     total = num_partitions
-    if "partitions_total" in lin_all.columns:
+    if "partitions_total" in lin.columns:
         # denominator from the SAME latest-per-partition rows that supply
         # the numerator — multiple runs (run_prefix streams) may share one
         # lineage_dir, and the globally newest row could belong to a
@@ -235,21 +243,18 @@ def job_progress(
     }
 
 
-def ice_done_partitions(spark: SparkSession, table) -> DataFrame | None:
+def ice_done_partitions(spark: SparkSession, table) -> set[int]:
     """Succeeded partition ids straight from the table's SNAPSHOT LOG
     (resume's source of truth since round 7): every overwrite snapshot
     records the partitions it committed in ``replaced_partitions``, so
     resume state needs no side table — a crash between commit and any
-    bookkeeping can never lose or double-count a partition."""
-    done: set[int] = set()
-    for s in table.snapshots():
-        for p in s["summary"].get("replaced_partitions", []):
-            done.add(int(p))
-    if not done:
-        return None
-    return spark.createDataFrame(
-        [(p,) for p in sorted(done)], "partition_id int"
-    )
+    bookkeeping can never lose or double-count a partition.  Read on the
+    driver from table metadata; no Spark job runs."""
+    return {
+        int(p)
+        for s in table.snapshots()
+        for p in s["summary"].get("replaced_partitions", [])
+    }
 
 
 def run_with_lineage_ice(
@@ -275,6 +280,15 @@ def run_with_lineage_ice(
     (:func:`ice_done_partitions`), never a side table.  The per-partition
     lineage parquet is still appended AFTER the commit as a derived
     convenience mirror for ``job_progress`` — losing it loses nothing.
+
+    ``num_partitions`` (``P``) is the LOGICAL unit: resume skips and
+    lineage counts whole partition ids.  Physical parallelism is the
+    task slots (``pipeline/extract.py``): the kernel runs one task per
+    slot, and the sink re-clusters into ``min(P, slots)`` tasks, because
+    each Python task costs a fixed ~0.25 s launch whatever it holds.  A
+    run pays for one kernel wave, one staged write, and one lineage
+    aggregate whose <= ``P`` rows feed both the snapshot summary and the
+    mirror; the resume ids and result counts stay on the driver.
     """
     from ..sources.icetable import IceTable
 
@@ -292,8 +306,11 @@ def run_with_lineage_ice(
 
     started_at = datetime.now(timezone.utc)  # before the data write
     entries = table.stage_overwrite(
-        # blob-free re-cluster by the logical id (see run_with_lineage)
-        extracted.repartition(num_partitions, F.col("partition_id"))
+        # blob-free re-cluster by the logical id (see run_with_lineage):
+        # each id lands whole in one task, so one file set per partition
+        extracted.repartition(
+            min(num_partitions, task_slots(extracted)), F.col("partition_id")
+        )
     )
     lin = None
     lineage_summary = {
@@ -301,49 +318,53 @@ def run_with_lineage_ice(
         "byte_count": 0, "checksum": None,
     }
     if entries:
-        staged = spark.read.option("basePath", table.data_dir).parquet(
-            *[os.path.join(table.table_dir, e["path"]) for e in entries]
+        # the known schema spares Spark its footer-inference job
+        staged = (
+            spark.read.schema(extracted.schema)
+            .option("basePath", table.data_dir)
+            .parquet(*[os.path.join(table.table_dir, e["path"]) for e in entries])
         )
+        # cached: its <= P rows feed the summary now and the mirror after
+        # the commit, so the staged files are aggregated exactly once
         lin = lineage_rows(
             staged, run_id, started_at=started_at, partitions_total=num_partitions
-        )
-        row = lin.agg(
-            F.sum("doc_count").alias("doc_count"),
-            F.sum("ok_count").alias("ok_count"),
-            F.sum("failed_count").alias("failed_count"),
-            F.sum("byte_count").alias("byte_count"),
-            F.md5(
-                F.concat_ws("", F.sort_array(F.collect_list("checksum")))
-            ).alias("checksum"),
-        ).collect()[0]
+        ).persist()
+        rows = lin.collect()
         lineage_summary = {
-            # a staged-but-empty file set aggregates to NULLs
-            k: (int(row[k] or 0) if k != "checksum" else row[k])
-            for k in lineage_summary
+            k: sum(r[k] for r in rows)
+            for k in ("doc_count", "ok_count", "failed_count", "byte_count")
         }
-    snap = table.commit_overwrite(
-        entries,
-        extra_summary={
-            "run_id": run_id,
-            "started_at": started_at.isoformat(),
-            "finished_at": datetime.now(timezone.utc).isoformat(),
-            "partitions_total": num_partitions,
-            "lineage": lineage_summary,
-        },
-    )
-    if lin is not None:
-        # derived mirror (see docstring) — written only after the commit
-        lin.withColumn("snapshot_id", F.lit(int(snap["snapshot_id"]))).write.mode(
-            "append"
-        ).parquet(lineage_dir)
+        # == md5(concat_ws('', sort_array(collect_list(checksum)))): the
+        # row checksums are ASCII hex, so str order is Spark's byte order
+        lineage_summary["checksum"] = hashlib.md5(
+            "".join(sorted(r["checksum"] for r in rows)).encode()
+        ).hexdigest()
+    try:
+        snap = table.commit_overwrite(
+            entries,
+            extra_summary={
+                "run_id": run_id,
+                "started_at": started_at.isoformat(),
+                "finished_at": datetime.now(timezone.utc).isoformat(),
+                "partitions_total": num_partitions,
+                "lineage": lineage_summary,
+            },
+        )
+        if lin is not None:
+            # derived mirror (see docstring) — written only after the
+            # commit, from the cached rows the summary was summed from
+            lin.withColumn("snapshot_id", F.lit(int(snap["snapshot_id"]))).write.mode(
+                "append"
+            ).parquet(lineage_dir)
+    finally:
+        if lin is not None:
+            lin.unpersist()
 
-    n_done = 0 if done is None else done.count()
-    done_now = ice_done_partitions(spark, table)
     return {
         "run_id": run_id,
         "snapshot_id": int(snap["snapshot_id"]),
-        "resumed_partitions_skipped": n_done,
-        "partitions_total": 0 if done_now is None else done_now.count(),
+        "resumed_partitions_skipped": len(done),
+        "partitions_total": len(ice_done_partitions(spark, table)),
         "table_dir": table_dir,
         "lineage_dir": lineage_dir,
     }

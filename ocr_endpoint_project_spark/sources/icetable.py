@@ -1104,10 +1104,12 @@ class IceTable:
         # spelling (hdfs:/x relying on fs.defaultFS) — a raw relpath on
         # mismatched forms would see every live file as an orphan and
         # delete the whole table. A listed path outside the qualified
-        # table dir aborts cleanup instead of guessing.
+        # table dir aborts cleanup instead of guessing — checked for the
+        # WHOLE listing before the first delete, so a bad listing deletes
+        # nothing.
         base = self.io.qualify(self.table_dir).rstrip("/")
-        removed = 0
-        for p in list(self.io.list_files(self.data_dir)):
+        orphans: list[str] = []
+        for p in self.io.list_files(self.data_dir):
             q = self.io.qualify(p)
             if not q.startswith(base + "/"):
                 raise RuntimeError(
@@ -1115,9 +1117,10 @@ class IceTable:
                     f"table dir {base!r}; refusing cleanup"
                 )
             if q[len(base) + 1 :] not in live:
-                self.io.delete(p)
-                removed += 1
-        return removed
+                orphans.append(p)
+        for p in orphans:
+            self.io.delete(p)
+        return len(orphans)
 
     def expire_snapshots(self, keep_last: int = 1) -> dict:
         """Drop history older than the newest ``keep_last`` snapshots,

@@ -519,7 +519,7 @@ def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     # resume state comes from the snapshot log, not the parquet mirror
     shutil.rmtree(r1["lineage_dir"])
     done = ice_done_partitions(spark, table)
-    assert done is not None and done.count() == 8
+    assert len(done) == 8
     r2 = run_with_lineage_ice(spark, pages, out, run_id="rB", num_partitions=8)
     assert r2["resumed_partitions_skipped"] == 8
     assert table.scan(spark).count() == 40
@@ -528,3 +528,77 @@ def test_ice_sink_lineage_in_summary_and_log_resume(spark, tmp_path):
     s2 = table.snapshots()[-1]["summary"]
     assert s2["run_id"] == "rB" and s2["lineage"]["doc_count"] == 0
     pages.unpersist()
+
+
+def test_ice_sink_resume_job_budget_and_mirror_matches_summary(spark, tmp_path):
+    """A crash-then-resume pair pays for one kernel wave, one staged
+    write and ONE lineage aggregate per run: the resume ids and result
+    counts stay on the driver and the mirror is written from the rows the
+    summary was summed from (the resumed run took 15 Spark jobs before
+    that; 7 after). The summary's checksum is still Spark's
+    ``md5(concat_ws('', sort_array(collect_list(checksum))))`` over the
+    mirror rows, and its counts their sums."""
+    from ocr_endpoint_project_spark.pipeline.extract import salted_pages
+    from ocr_endpoint_project_spark.pipeline.lineage import run_with_lineage_ice
+    from ocr_endpoint_project_spark.sources.pages import corpus_pages
+
+    sc = spark.sparkContext
+    pages = corpus_pages(spark, n=60, seed=23).cache()
+    half = salted_pages(pages, 16).filter("partition_id < 8").drop("partition_id").cache()
+    pages.count(), half.count()
+    out = str(tmp_path / "job")
+
+    def jobs_of(group, run):
+        sc.setJobGroup(group, group)
+        try:
+            res = run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return res, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    r1, _ = jobs_of("budget-crash", lambda: run_with_lineage_ice(
+        spark, half, out, run_id="rA", num_partitions=16))
+    r2, n_jobs = jobs_of("budget-resume", lambda: run_with_lineage_ice(
+        spark, pages, out, run_id="rB", num_partitions=16))
+    assert 0 < r2["resumed_partitions_skipped"] == r1["partitions_total"] <= 8
+    assert r2["partitions_total"] == salted_pages(pages, 16).select("partition_id").distinct().count()
+    assert n_jobs <= 7, f"resumed run took {n_jobs} Spark jobs"
+
+    table = IceTable.load(r2["table_dir"])
+    for snap in table.snapshots():
+        summary = snap["summary"]["lineage"]
+        mirror = spark.read.parquet(r2["lineage_dir"]).filter(
+            F.col("snapshot_id") == snap["snapshot_id"]
+        )
+        row = mirror.agg(
+            F.md5(F.concat_ws("", F.sort_array(F.collect_list("checksum")))).alias("checksum"),
+            F.sum("doc_count").alias("doc_count"),
+            F.sum("byte_count").alias("byte_count"),
+        ).collect()[0]
+        assert row["checksum"] == summary["checksum"]
+        assert row["doc_count"] == summary["doc_count"]
+        assert row["byte_count"] == summary["byte_count"]
+    assert table.scan(spark).count() == 60
+    half.unpersist()
+    pages.unpersist()
+
+
+def test_remove_orphan_files_validates_listing_before_deleting(spark, tmp_path, monkeypatch):
+    """A listing that holds a real orphan BEFORE a path outside the table
+    dir must abort with nothing deleted — containment is checked for
+    every listed path before the first delete."""
+    t = IceTable.create(str(tmp_path / "t"), partition_col="part", stat_cols=["k"])
+    t.append(_df(spark, 0, 40))
+    orphan = os.path.join(t.data_dir, "part=0", "orphan.parquet")
+    with open(orphan, "wb") as f:
+        f.write(b"x")
+    outside = tmp_path / "elsewhere.parquet"
+    outside.write_bytes(b"y")
+    monkeypatch.setattr(t.io, "list_files", lambda path: iter([orphan, str(outside)]))
+    with pytest.raises(RuntimeError, match="not under table dir"):
+        t.remove_orphan_files()
+    assert os.path.exists(orphan) and outside.exists()
+    monkeypatch.undo()
+    assert t.remove_orphan_files() == 1
+    assert not os.path.exists(orphan) and outside.exists()
+    assert t.scan(spark).count() == 40

@@ -224,3 +224,22 @@ def test_validate_record_failures():
     bad2["experiences"] = [{"position_title": "x"}]  # missing required keys
     ok2, err2 = validate_record(bad2)
     assert not ok2
+
+
+def test_hoist_drops_no_rows_and_rejects_reserved_name(spark):
+    """``hoist``'s one-element explode keeps rows whose expression is
+    NULL, and refuses a column name equal to its ``_hoisted``
+    intermediate."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    from ocr_endpoint_project_spark.functions.text import hoist
+
+    df = spark.createDataFrame([(1, "a b"), (2, None)], "k int, t string")
+    rows = sorted(hoist(df, ("k",), toks=F.split("t", " ")).collect())
+    assert [r.k for r in rows] == [1, 2]
+    assert rows[0].toks == ["a", "b"] and rows[1].toks is None
+    with pytest.raises(ValueError, match="reserved"):
+        hoist(df.withColumnRenamed("t", "_hoisted"), ("k", "_hoisted"), n=F.col("k"))
+    with pytest.raises(ValueError, match="reserved"):
+        hoist(df, ("k",), _hoisted=F.col("t"))

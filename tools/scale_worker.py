@@ -49,11 +49,11 @@ def main() -> None:
         if cmd == "run":
             # drain GC debt from the PREVIOUS run before timing this one
             spark.sparkContext._jvm.System.gc()
-            # SAME partition count on BOTH legs (like a real cluster
-            # job: partitions are sized for the data, executors scale
-            # underneath) — per-thread task overhead then shrinks with
-            # cores instead of acting as a serial constant, and both
-            # legs see the identical skew profile
+            # SAME logical partition count on BOTH legs (like a real
+            # cluster job: partitions are sized for the data, executors
+            # scale underneath); the kernel runs one task per slot on
+            # each leg (pipeline/extract.py), so neither leg pays a
+            # serial per-task overhead the other does not
             sec, n, _ = time_extraction(spark, replicas=replicas, partitions=SCALING_PARTITIONS)
             print(json.dumps({"sec": sec, "n": n}), flush=True)
         elif cmd == "quit":
